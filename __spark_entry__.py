@@ -51,7 +51,7 @@ from osm_pbf_spark.operators.packing import (
     concat_chunk_pack,
     stratified_sample,
 )
-from osm_pbf_spark.operators.spatial_join import Polygon, pip_join
+from osm_pbf_spark.operators.spatial_join import Polygon, pip_join, pip_join_rings
 from osm_pbf_spark.operators.tiling import assign_line_tiles, assign_point_tiles
 from osm_pbf_spark.sources.tables import (
     SQL_POINTS,
@@ -90,6 +90,11 @@ PENT = Polygon(
     ])],
 )
 PIP_POLYGONS = [RECT, TRI, PENT]
+
+# q_scc edges appended to the events-derived graph: a DAG edge from the
+# SCC of 2 into the SCC of the min id 0. Both SCCs then share FW-MIN
+# color 0, but 0 does not reach 2, so they must stay apart.
+SCC_EXTRA_EDGES = [(2, 0)]
 
 
 def _halfplane_sql(verts: list[tuple[float, float]]) -> str:
@@ -475,13 +480,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["q_pip_join"] = q_pip_join
 
-    def q_pip_shuffle(spark, sf):  # G4 salted shuffle-strategy PIP join
-        # same semantics as q_pip_join, via the huge-cover path: point
+    def pip_rings(spark):  # PIP_POLYGONS as a pip_join_rings polygon side
+        return spark.createDataFrame(
+            [
+                (p.poly_id, 0, [(float(la), float(lo)) for la, lo in p.rings[0]])
+                for p in PIP_POLYGONS
+            ],
+            "poly_id string, ring_idx int, pts array<struct<lat: double, lon: double>>",
+        )
+
+    def q_pip_shuffle(spark, sf):  # G4 salted shuffle PIP join
+        # same semantics as q_pip_join, via the partitioned path: point
         # side shuffled on cell with measured salting on heavy cells
         # (threshold forced low so the salt actually engages at sf0.01)
         pts = customer_points(spark, sf)
-        return pip_join(
-            spark, pts, PIP_POLYGONS, level=8, strategy="shuffle", salt_threshold=50
+        return pip_join_rings(
+            spark, pts, pip_rings(spark), level=8, salt_threshold=50
         ).select("doc_id", "poly_id")
 
     q["q_pip_shuffle"] = q_pip_shuffle
@@ -489,17 +503,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_pip_rings(spark, sf):  # G2/G3 DataFrame-native polygon side:
         # cover + refine fully distributed (no driver polygon collect) —
         # the 10^6-polygon regime; same semantics as q_pip_join
-        from osm_pbf_spark.operators.spatial_join import pip_join_rings
-
-        rings = spark.createDataFrame(
-            [
-                (p.poly_id, 0, [(float(la), float(lo)) for la, lo in p.rings[0]])
-                for p in PIP_POLYGONS
-            ],
-            "poly_id string, ring_idx int, pts array<struct<lat: double, lon: double>>",
-        )
         pts = customer_points(spark, sf)
-        return pip_join_rings(spark, pts, rings, level=8).select("doc_id", "poly_id")
+        return pip_join_rings(spark, pts, pip_rings(spark), level=8).select(
+            "doc_id", "poly_id"
+        )
 
     q["q_pip_rings"] = q_pip_rings
 
@@ -7004,6 +7011,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.pmod(F.col("event_id") * 7, F.lit(150)).alias("src"),
             F.pmod(F.col("event_id") * 23 + 1, F.lit(150)).alias("dst"),
         )
+        e = e.unionAll(spark.createDataFrame(SCC_EXTRA_EDGES, e.schema))
         return scc(e).orderBy("node")
 
     q["q_scc"] = q_scc
@@ -11697,7 +11705,7 @@ def _ora_scc() -> str:
     peeling; comp = min node id per SCC."""
     adj: dict = {}
     nodes = set()
-    for a, b in _graph_edges(1500, 150, 150, 7, 23, 1):
+    for a, b in _graph_edges(1500, 150, 150, 7, 23, 1) + SCC_EXTRA_EDGES:
         if a == b:
             continue
         nodes |= {a, b}

@@ -2131,15 +2131,16 @@ def scc(
     The cycle-structure primitive (dependency knots, currency
     arbitrage loops, link-farm detection, deadlock cliques).
 
-    Algorithm: iterative FW-MIN coloring + in-color backward closure
+    Algorithm: iterative FW-MIN coloring + in-color forward closure
     (the Orzan / FW-BW-MIN family — the standard distributed SCC):
 
       1. forward min-label to fixpoint: f(v) = min id forward-
-         reachable from v (including v);
+         reachable from v (including v), so f(v) == c means "v
+         reaches c";
       2. every color-class leader c (f(c) == c) anchors one SCC:
-         SCC(c) = {v : f(v) == c and v reaches c} — and any v -> c
+         SCC(c) = {v : f(v) == c and c reaches v} — and any c -> v
          path stays inside the color class (proved in-line below), so
-         the backward closure runs on SAME-COLOR edges only;
+         the forward closure from c runs on SAME-COLOR edges only;
       3. decided nodes peel off; repeat on the residual graph.
 
     Each peel removes every leader SCC, so outer iterations are few in
@@ -2197,10 +2198,10 @@ def scc(
             f = upd.select("node", "f")
             if n_chg == 0:
                 break
-        # 2) backward closure of each leader inside its color class:
-        #    any v->..->c path with f(v)==c stays in color c, because
-        #    reachable(w) ⊆ reachable(v) gives f(w) >= f(v) = c while
-        #    c ∈ reachable(w) gives f(w) <= c.
+        # 2) forward closure of each leader inside its color class:
+        #    any c->..->w->..->v path with f(v)==c stays in color c,
+        #    because reachable(w) ⊆ reachable(c) gives f(w) >= f(c) = c
+        #    while c ∈ reachable(v) ⊆ reachable(w) gives f(w) <= c.
         ce = (
             alive_e.join(f.withColumnRenamed("node", "a").withColumnRenamed("f", "_fa"), "a")
             .join(f.withColumnRenamed("node", "b").withColumnRenamed("f", "_fb"), "b")
@@ -2211,18 +2212,19 @@ def scc(
         reach = f.where(F.col("node") == F.col("f")).select("node").localCheckpoint(
             eager=True
         )
+        frontier = reach
         while True:
             tick()
-            nxt = (
-                ce.join(reach.withColumnRenamed("node", "b"), "b")
-                .select(F.col("a").alias("node"))
+            frontier = (
+                ce.join(frontier.withColumnRenamed("node", "a"), "a")
+                .select(F.col("b").alias("node"))
                 .distinct()
                 .join(reach, "node", "left_anti")
                 .localCheckpoint(eager=True)
             )
-            if nxt.isEmpty():
+            if frontier.isEmpty():
                 break
-            reach = reach.unionAll(nxt).localCheckpoint(eager=True)
+            reach = reach.unionAll(frontier).localCheckpoint(eager=True)
         decided = reach.join(f, "node").select("node", F.col("f").alias("comp"))
         parts.append(decided.localCheckpoint(eager=True))
         alive_n = alive_n.join(reach, "node", "left_anti").localCheckpoint(eager=True)

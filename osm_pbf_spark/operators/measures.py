@@ -27,6 +27,8 @@ Engine-independence contract (what makes these DuckDB-gateable):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,6 +50,10 @@ __all__ = [
 ]
 
 DEG2RAD = 0.017453292519943295  # closest float64 to pi/180 — keep literal
+# densify_route refuses legs with pi - d below this: the haversine d
+# loses precision as 1/(pi - d), and the slerp points drift by about
+# 1e-16/(pi - d)^2 rad — one 1e-7-degree output unit near 2e-4 rad
+ANTIPODAL_EPS = 1e-3
 EARTH_RADIUS_M = 6371008.8
 
 
@@ -707,7 +713,9 @@ def densify_route(
     rationals i/(n_points+1); outputs are integer 1e-7-degree units
     (the destination_point rounding contract — cross-engine trig
     drift absorbed). Zero-length legs (d below 1e-12 rad) emit the
-    start point at every fraction (slerp is 0/0 there).
+    start point at every fraction (slerp is 0/0 there). A leg within
+    ``ANTIPODAL_EPS`` rad of antipodal (pi - d below it) has no
+    well-determined great circle and raises instead of emitting points.
 
     Plan: one native Generate (sequence explode) + a pure-codegen trig
     chain — map-only. Returns legs.* + (seq, lat_e7, lon_e7), seq
@@ -738,13 +746,21 @@ def densify_route(
     plat = F.atan2(z, F.sqrt(x * x + y * y)) * F.lit(1.0 / DEG2RAD)
     plon = F.atan2(y, x) * F.lit(1.0 / DEG2RAD)
     degenerate = dd < F.lit(1e-12)
+    bad = F.raise_error(F.format_string(
+        "densify_route: leg (%s, %s) -> (%s, %s) is within %s rad of "
+        "antipodal; its great circle is not determined",
+        F.col(lat1), F.col(lon1), F.col(lat2), F.col(lon2), F.lit(ANTIPODAL_EPS),
+    ))
+    antipodal = dd > F.lit(math.pi - ANTIPODAL_EPS)
     return out.select(
         *legs.columns,
         "seq",
         F.round(
-            F.when(degenerate, F.col(lat1)).otherwise(plat) * F.lit(1e7)
+            F.when(antipodal, bad).when(degenerate, F.col(lat1)).otherwise(plat)
+            * F.lit(1e7)
         ).cast("long").alias("lat_e7"),
         F.round(
-            F.when(degenerate, F.col(lon1)).otherwise(plon) * F.lit(1e7)
+            F.when(antipodal, bad).when(degenerate, F.col(lon1)).otherwise(plon)
+            * F.lit(1e7)
         ).cast("long").alias("lon_e7"),
     )

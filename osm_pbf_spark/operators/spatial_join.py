@@ -13,10 +13,11 @@ and its exact leaf test becomes a batched-pandas-UDF refine.
                       through a vectorized crossing-number test.
 
 At 10^12-doc scale stage 1 stays shuffle-free (cover is tiny:
-#polygons x cells/polygon) and stage 2 is narrow. For polygon sets too
-large to broadcast there is a `shuffle` strategy that shuffles the
-point side on cell — and THERE a dense urban cell is a hot key, killed
-by operators.skew measured salting (see the strategy branch below).
+#polygons x cells/polygon) and stage 2 is narrow. ``pip_join`` runs
+this plan for a driver polygon list. For polygon sets too large to
+broadcast, ``pip_join_rings`` takes the polygons as a DataFrame and
+shuffles the point side on cell — and THERE a dense urban cell is a
+hot key, killed by operators.skew measured salting.
 """
 
 from __future__ import annotations
@@ -123,38 +124,6 @@ def polygon_cell_cover(polygons: list[Polygon], level: int) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def polygon_cell_cover_dist(
-    spark: SparkSession, polygons: list[Polygon], level: int, slice_size: int = 64
-) -> DataFrame:
-    """Distributed polygon cell cover: same rows as polygon_cell_cover
-    but computed by executors, ``slice_size`` polygons per task. The
-    driver-side loop is fine to ~10^5 polygons at target_cells=256;
-    for larger sets (the pip_join ``shuffle`` strategy's regime) the
-    per-polygon work distributes embarrassingly — rings ship PICKLED
-    inside an Arrow binary column, never as JVM row objects."""
-    import pickle
-
-    import pandas as pd
-
-    slices = [
-        pickle.dumps([(p.poly_id, p.rings) for p in polygons[i : i + slice_size]])
-        for i in range(0, len(polygons), slice_size)
-    ]
-    if not slices:
-        return spark.createDataFrame([], "cell long, poly_id string, full boolean")
-    src = spark.createDataFrame(
-        pd.DataFrame({"blob": slices}), "blob binary"
-    ).repartition(min(len(slices), spark.sparkContext.defaultParallelism * 4))
-
-    def _cover(batches):
-        for pdf in batches:
-            for blob in pdf["blob"]:
-                group = [Polygon(pid, rings) for pid, rings in pickle.loads(bytes(blob))]
-                yield polygon_cell_cover(group, level)
-
-    return src.mapInPandas(_cover, "cell long, poly_id string, full boolean")
-
-
 def with_cell(df: DataFrame, level: int, lat_col: str = "lat", lon_col: str = "lon",
               out_col: str = "cell") -> DataFrame:
     """Attach the Morton cell id — NATIVE column expression (whole-stage
@@ -175,13 +144,14 @@ def _explode_multilevel_cells(
     with the shift; pinned bit-identical by tests/test_cells_native) —
     because exploding an array of full encode trees drops the Generate
     out of whole-stage codegen (~20x slower, measured 3.7 s vs 0.16 s
-    on a 200k x 3-level probe)."""
+    on a 200k x 3-level probe). Like ``with_cell``, it replaces a
+    ``cell`` column the points already carry."""
     fin = max(levels)
+    if len(levels) == 1:
+        return with_cell(points, fin, lat_col, lon_col)
     base = points.withColumn(
         "_cell_fin", C.cell_id_col(F.col(lat_col), F.col(lon_col), fin)
     )
-    if len(levels) == 1:
-        return base.withColumnRenamed("_cell_fin", "cell")
     return base.withColumn(
         "cell",
         F.explode(F.array(*[
@@ -216,9 +186,7 @@ def pip_join(
     level: int | str = "auto",
     lat_col: str = "lat",
     lon_col: str = "lon",
-    strategy: str = "broadcast",
     target_cells: int = 256,
-    salt_threshold: int = 2_000_000,
 ) -> DataFrame:
     """points x polygons containment join -> points columns + poly_id.
 
@@ -226,83 +194,33 @@ def pip_join(
     test (functions.geometry convention) says p in poly — matching the
     brute-force oracle bit-for-bit. ``level="auto"`` covers each polygon
     at its own normalized level (see pick_cover_level) — bounded cover
-    size AND thin refine bands for any polygon-size mix. With the
-    broadcast strategy all levels run in ONE plan (point side exploded
-    to one cell per distinct level; level-tagged cell ids cannot
-    collide); the shuffle strategy joins per level so salting stays
-    per-level-keyed.
+    size AND thin refine bands for any polygon-size mix; an int covers
+    every polygon at that level.
+
+    One plan for every input: the per-level driver covers are
+    concatenated into ONE broadcast cover (cell ids embed their level in
+    the low 5 bits, so covers at different levels never collide), the
+    point side is exploded to its cell at each distinct level, and ONE
+    refine stage follows. The polygon list is broadcast, so it must fit
+    in memory; a polygon side too large for that, or a point side whose
+    hot cells need salting, goes through ``pip_join_rings``.
     """
-    if level == "auto":
-        by_level: dict[int, list[Polygon]] = {}
-        for p in polygons:
-            by_level.setdefault(pick_cover_level(p, target_cells), []).append(p)
-        if not by_level:
-            # empty polygon list (polygons_from_closed_ways can return
-            # []): fall through to the non-auto path, which joins
-            # against an empty cover and yields an empty DataFrame with
-            # the points-plus-poly_id schema instead of None
-            level = 12
-        elif strategy == "broadcast":
-            # SINGLE-PLAN multi-level join (r3): cell ids embed their
-            # level in the low 5 bits (cells.cell_id_col), so covers at
-            # different levels never collide — one broadcast join over
-            # the union of all per-level covers, with the point side
-            # exploded to its cell at each distinct level, then ONE
-            # refine stage. The old plan unioned a full join+refine
-            # branch per level — ~2k extra stages of fixed mapInPandas
-            # and scheduling overhead per call (measured 2-3.5 s on a
-            # 1000-point input), which dominated short spatial stages.
-            levels = sorted(by_level)
-            cover_pdf = pd.concat(
-                [polygon_cell_cover(group, lvl) for lvl, group in sorted(by_level.items())],
-                ignore_index=True,
-            )
-            cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else (
-                spark.createDataFrame([], "cell long, poly_id string, full boolean")
-            )
-            pts = _explode_multilevel_cells(points, levels, lat_col, lon_col)
-            cand = pts.join(F.broadcast(cover), "cell", "inner")
-            return _refine_candidates(spark, cand, polygons, lat_col, lon_col)
-        else:
-            out = None
-            for lvl, group in sorted(by_level.items()):
-                part = pip_join(
-                    spark, points, group, lvl, lat_col, lon_col, strategy, target_cells
-                )
-                out = part if out is None else out.unionByName(part)
-            return out
-
-    if strategy != "broadcast" and len(polygons) > 2000:
-        # large-cover regime: compute the cover ON THE EXECUTORS
-        # (driver loop is fine to ~10^5 polygons; beyond that it and
-        # the createDataFrame upload become the bottleneck)
-        cover = polygon_cell_cover_dist(spark, polygons, level)
-    else:
-        cover_pdf = polygon_cell_cover(polygons, level)
-        cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else spark.createDataFrame(
-            [], "cell long, poly_id string, full boolean"
-        )
-    pts = with_cell(points, level, lat_col, lon_col)
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(cover), "cell", "inner")
-    else:
-        # shuffle strategy for polygon/cover sets too large to broadcast:
-        # the equi-join shuffles the POINT side on cell, so a dense urban
-        # cell (BASELINE's skew case) would land one reducer with 10^8+
-        # rows. MEASURED SALTING (SURVEY §2.3 G4, operators.skew): one
-        # cheap count-by-cell pass finds heavy cells, the point side
-        # salts them pmod(hash(lat,lon), k), and the (small) cover side
-        # replicates its rows for heavy cells across all k salts — the
-        # join key becomes (cell, salt) and a hot cell spreads over k
-        # reducers. AQE's skew-join split remains on as a backstop for
-        # everything under the measuring threshold.
-        from .skew import heavy_hitters, replicate_for_salt, with_salt
-
-        heavy = heavy_hitters(pts, "cell", salt_threshold)
-        pts_s = with_salt(pts, "cell", heavy, [lat_col, lon_col], "_salt")
-        cover_s = replicate_for_salt(cover, "cell", heavy, "_salt")
-        cand = pts_s.join(cover_s, ["cell", "_salt"], "inner").drop("_salt")
-
+    if not polygons:
+        # nothing can contain a point: empty, points-plus-poly_id schema
+        return points.drop("cell").withColumn("poly_id", F.lit(None).cast("string")).limit(0)
+    by_level: dict[int, list[Polygon]] = {}
+    for p in polygons:
+        lvl = pick_cover_level(p, target_cells) if level == "auto" else level
+        by_level.setdefault(lvl, []).append(p)
+    cover_pdf = pd.concat(
+        [polygon_cell_cover(group, lvl) for lvl, group in sorted(by_level.items())],
+        ignore_index=True,
+    )
+    cover = spark.createDataFrame(cover_pdf) if len(cover_pdf) else (
+        spark.createDataFrame([], "cell long, poly_id string, full boolean")
+    )
+    pts = _explode_multilevel_cells(points, sorted(by_level), lat_col, lon_col)
+    cand = pts.join(F.broadcast(cover), "cell", "inner")
     return _refine_candidates(spark, cand, polygons, lat_col, lon_col)
 
 
@@ -313,9 +231,9 @@ def _refine_candidates(
     lat_col: str,
     lon_col: str,
 ) -> DataFrame:
-    """Exact stage shared by the pip_join paths: `full`-cell candidates
-    bypass Python (provably inside); boundary candidates go through one
-    vectorized crossing-number refine against the broadcast rings."""
+    """Exact stage of pip_join: `full`-cell candidates bypass Python
+    (provably inside); boundary candidates go through one vectorized
+    crossing-number refine against the broadcast rings."""
     rings_by_poly = {p.poly_id: [r.copy() for r in p.rings] for p in polygons}
     b_rings = spark.sparkContext.broadcast(rings_by_poly)
     out_schema = cand.drop("full", "cell").schema

@@ -154,6 +154,22 @@ def test_scc_matches_tarjan(spark):
     assert got[10] == got[11] == 10
 
 
+@pytest.mark.parametrize(
+    "edges",
+    [[(3, 2), (2, 1)], [(1, 2), (2, 1), (3, 1)]],
+    ids=["chain", "dag_edge_into_cycle"],
+)
+def test_scc_one_way_edges_into_min_id(spark, edges):
+    """Nodes that reach the min id without being reached back share its
+    FW-MIN color but are SCCs of their own."""
+    from osm_pbf_spark.operators.graph import scc
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r.node: r.comp for r in scc(df).collect()}
+    assert got == _tarjan(edges)
+    assert got[3] == 3
+
+
 def test_scc_synthetic_mixed(spark):
     from osm_pbf_spark.operators.graph import scc
 

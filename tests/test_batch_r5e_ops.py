@@ -5,6 +5,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -91,6 +92,22 @@ def test_densify_route_midpoint_and_degenerate(spark):
     # degenerate zero-length leg emits the start point
     for s in (1, 2, 3):
         assert got[(2, s)] == (450_000_000, 70_000_000)
+
+
+@pytest.mark.parametrize(
+    "leg",
+    [(0.0, 0.0, 0.0, 180.0), (10.0, 20.0, -10.0, -160.0), (0.0, 0.0, 0.0, 179.9999)],
+)
+def test_densify_route_antipodal_leg_raises(spark, leg):
+    """At d ~ pi the great circle is not determined: fail, not emit
+    plausible points (these legs used to come out as made-up vertices)."""
+    from osm_pbf_spark.operators.measures import densify_route
+
+    legs = spark.createDataFrame(
+        [(1, *leg)], "leg long, lat1 double, lon1 double, lat2 double, lon2 double"
+    )
+    with pytest.raises(Exception, match="antipodal"):
+        densify_route(legs, n_points=3).collect()
 
 
 def test_densify_route_great_circle_bulge(spark):

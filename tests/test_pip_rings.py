@@ -183,3 +183,64 @@ def test_rings_auto_level_mixed_sizes(spark):
         for r in pip_join_rings(spark, pts, _rings_df(spark, polys), level="auto").collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_rings_overlapping_polygons_match_bruteforce(spark):
+    """2,100 overlapping random rects (a polygon side past the point
+    where a driver cover stops being cheap) must match per-polygon
+    brute-force PIP."""
+    import pandas as pd
+
+    from tests.oracle_geo import point_in_polygon
+
+    rng = np.random.default_rng(11)
+    polys = []
+    for i in range(2100):
+        la = float(rng.uniform(-60, 60))
+        lo = float(rng.uniform(-170, 170))
+        s = float(rng.uniform(0.05, 0.4))
+        polys.append(Polygon(f"p{i}", [np.array([
+            [la, lo], [la, lo + s], [la + s, lo + s], [la + s, lo]
+        ])]))
+
+    pts = spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(300),
+        "lat": rng.uniform(-60, 61, 300),
+        "lon": rng.uniform(-170, 171, 300),
+    }))
+    out = sorted(
+        (r.doc_id, r.poly_id)
+        for r in pip_join_rings(spark, pts, _rings_df(spark, polys), level=7).collect()
+    )
+    rows = pts.collect()
+    want_pairs = sorted(
+        (r.doc_id, p.poly_id)
+        for r in rows
+        for p in polys
+        if point_in_polygon(r.lat, r.lon, [list(map(tuple, p.rings[0]))])
+    )
+    assert out == want_pairs
+
+
+def test_points_carrying_cell_column(spark):
+    """A point frame that already has a ``cell`` column (read_documents
+    output does) joins exactly like the same frame without it, on both
+    operators and on the one-cover-level plan."""
+    sq = Polygon("sq", [np.array([[10.0, 10.0], [10.0, 20.0], [20.0, 20.0], [20.0, 10.0]])])
+    pts = spark.createDataFrame(
+        [(1, 15.0, 15.0), (2, 10.5, 19.5), (3, 25.0, 15.0)],
+        "doc_id long, lat double, lon double",
+    )
+    with_cell_col = pts.withColumn("cell", F.lit(7).cast("long"))
+    rings = _rings_df(spark, [sq])
+    for run in (
+        lambda df: pip_join(spark, df, [sq], level="auto"),
+        lambda df: pip_join(spark, df, [sq], level=8),
+        lambda df: pip_join_rings(spark, df, rings, level="auto"),
+        lambda df: pip_join_rings(spark, df, rings, level=8),
+    ):
+        want, got = run(pts), run(with_cell_col)
+        assert got.columns == want.columns == ["doc_id", "lat", "lon", "poly_id"]
+        assert sorted(got.collect()) == sorted(want.collect()) == [
+            (1, 15.0, 15.0, "sq"), (2, 10.5, 19.5, "sq"),
+        ]

@@ -1,11 +1,11 @@
 """G4 measured salting: wiring tests for operators.skew via
-pip_join(strategy='shuffle').
+pip_join_rings.
 
 The skew case is BASELINE's dense-urban-extent: one cell holding a huge
-share of the points. The shuffle-strategy join shuffles points on cell,
-so that cell is a hot key; measured salting must (a) leave results
-bit-identical to the broadcast path and (b) demonstrably spread the hot
-key across salt values.
+share of the points. pip_join_rings shuffles points on cell, so that
+cell is a hot key; measured salting must (a) leave results
+bit-identical to the broadcast pip_join and (b) demonstrably spread the
+hot key across salt values.
 """
 
 from __future__ import annotations
@@ -15,7 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_pbf_spark.operators.skew import heavy_hitters, replicate_for_salt, with_salt
-from osm_pbf_spark.operators.spatial_join import Polygon, pip_join, with_cell
+from osm_pbf_spark.operators.spatial_join import Polygon, pip_join, pip_join_rings, with_cell
+from tests.test_pip_rings import _rings_df
 
 HOT_LAT, HOT_LON = 40.75, -73.99  # the "city"
 
@@ -55,8 +56,8 @@ def test_salted_shuffle_matches_broadcast(spark, skewed_points):
     )
     b = sorted(
         (r.doc_id, r.poly_id)
-        for r in pip_join(
-            spark, skewed_points, POLYS, level=8, strategy="shuffle", salt_threshold=500
+        for r in pip_join_rings(
+            spark, skewed_points, _rings_df(spark, POLYS), level=8, salt_threshold=500
         ).collect()
     )
     assert a == b

@@ -81,21 +81,6 @@ def test_cover_full_cells_exist(spark):
     assert (~sq["full"]).sum() > 0  # and boundary partial cells
 
 
-def test_pip_join_shuffle_strategy_same_result(spark):
-    polys = make_polygons()[:3]
-    ids, pts = make_points(500, seed=11)
-    df = spark.createDataFrame(
-        [(i, float(a), float(b)) for i, (a, b) in zip(ids, pts)],
-        "doc_id string, lat double, lon double",
-    )
-    a = {(r["doc_id"], r["poly_id"]) for r in pip_join(spark, df, polys, 8).collect()}
-    b = {
-        (r["doc_id"], r["poly_id"])
-        for r in pip_join(spark, df, polys, 8, strategy="shuffle").collect()
-    }
-    assert a == b
-
-
 def test_pip_join_plan_is_broadcast(spark):
     polys = make_polygons()[:1]
     df = spark.createDataFrame([("a", 15.0, 15.0)], "doc_id string, lat double, lon double")
@@ -136,54 +121,10 @@ def test_pick_cover_level_monotone():
     assert 2 <= lvl_big <= 16 and 2 <= lvl_tiny <= 16
 
 
-def test_distributed_cover_matches_driver_cover(spark):
-    """polygon_cell_cover_dist must emit exactly the driver-side cover
-    rows, and the shuffle-strategy pip_join over a >2000-polygon set
-    (the distributed-cover regime) must match per-polygon brute PIP."""
-    import numpy as np
-    import pandas as pd
-
-    from osm_pbf_spark.operators.spatial_join import (
-        pip_join,
-        polygon_cell_cover,
-        polygon_cell_cover_dist,
-        Polygon,
-    )
-    from tests.oracle_geo import point_in_polygon
-
-    rng = np.random.default_rng(11)
-    polys = []
-    for i in range(2100):
-        la = float(rng.uniform(-60, 60))
-        lo = float(rng.uniform(-170, 170))
-        s = float(rng.uniform(0.05, 0.4))
-        polys.append(Polygon(f"p{i}", [np.array([
-            [la, lo], [la, lo + s], [la + s, lo + s], [la + s, lo]
-        ])]))
-
-    level = 7
-    want = polygon_cell_cover(polys, level)
-    got = polygon_cell_cover_dist(spark, polys, level).toPandas()
-    key = ["cell", "poly_id", "full"]
-    assert (
-        sorted(map(tuple, got[key].itertuples(index=False)))
-        == sorted(map(tuple, want[key].itertuples(index=False)))
-    )
-
-    pts = spark.createDataFrame(pd.DataFrame({
-        "doc_id": np.arange(300),
-        "lat": rng.uniform(-60, 61, 300),
-        "lon": rng.uniform(-170, 171, 300),
-    }))
-    out = sorted(
-        (r.doc_id, r.poly_id)
-        for r in pip_join(spark, pts, polys, level=level, strategy="shuffle").collect()
-    )
-    rows = pts.collect()
-    want_pairs = sorted(
-        (r.doc_id, p.poly_id)
-        for r in rows
-        for p in polys
-        if point_in_polygon(r.lat, r.lon, [list(map(tuple, p.rings[0]))])
-    )
-    assert out == want_pairs
+@pytest.mark.parametrize("level", ["auto", 8])
+def test_pip_join_empty_polygon_list(spark, level):
+    """No polygons: an empty frame with the points columns + poly_id."""
+    df = spark.createDataFrame([("a", 15.0, 15.0)], "doc_id string, lat double, lon double")
+    out = pip_join(spark, df, [], level=level)
+    assert out.columns == ["doc_id", "lat", "lon", "poly_id"]
+    assert out.count() == 0
